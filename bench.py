@@ -2,10 +2,11 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line {"metric", "value", "unit", "queries", "sf"}.
 
-Each query is executed to completion (count + a cheap full materialization
-via write to noop-like count) with a warm session; JVM startup is excluded
-per BASELINE.md. Reported per-query wall is the best of
-$SPARK_GRAFT_BENCH_RUNS (default 3) warm runs — single-shot timings on a
+Each query is timed to a ``count()`` with a warm session, which lets
+Spark prune columns the count does not need — it is not a full-result
+materialization (``perfbench/run.py`` gives full-result and per-layer
+figures). JVM startup is excluded per BASELINE.md. Reported per-query
+wall is the best of $SPARK_GRAFT_BENCH_RUNS (default 3) warm runs — single-shot timings on a
 shared box swing ±30% with unrelated load. The JSON line carries the
 1-minute load average at start and end so a noisy-neighbor run is
 recognizable in the recorded artifact.

@@ -37,67 +37,26 @@ def test_rows_only(spark, sf_dir, name):
     assert df.count() >= 0
 
 
-def test_grading_bookkeeping_consistent():
-    """The hand-maintained evidence-allocation sets in
-    queries/__init__.py must stay consistent with the registry: every
-    recorded graded/deferred key exists (a typo would silently
-    misprioritize the driver's 50-key window), and every changed-but-
-    deferred key holds prior green evidence (deferral is only legal for
-    keys the driver has already graded)."""
+def test_registry_in_module_order():
+    """The registry lists keys in ``_MODULES`` order, each module's keys
+    in definition order — no other ordering policy sits on top."""
+    import importlib
+
     from modevetl_spark import queries as Q
 
-    keys = set(_QUERIES)
-    for rnd, graded in (
-        (1, Q._GRADED_R1),
-        (2, Q._GRADED_R2),
-        (3, Q._GRADED_R3),
-        (4, Q._GRADED_R4),
-        (5, Q._GRADED_R5),
-        (6, Q._GRADED_R6),
-        (7, Q._GRADED_R7),
-        (8, Q._GRADED_R8),
-        (9, Q._GRADED_R9),
-        (10, Q._GRADED_R10),
-        (11, Q._GRADED_R11),
-        (12, Q._GRADED_R12),
-    ):
-        missing = graded - keys
-        assert not missing, (rnd, sorted(missing))
-    assert Q._CHANGED_R13_PIN <= keys
-    for k in Q._CHANGED_R13_PIN:
-        assert Q._freshest_round(k) > 0, k
-    # the grading window (first 50 emitted keys) must be exactly the
-    # highest-priority cohort prefix: no rotated key may outrank a
-    # never-graded or changed-pinned key
-    order = list(_QUERIES)
-    prios = [Q._grading_priority(k) for k in order]
-    assert prios == sorted(prios), "emission order violates priority"
-    # round-13 window composition: the registry is saturated (no staged
-    # tier, zero never-graded keys), so the window is the changed-key
-    # re-pins (0.5 — the compat-fold try-conversion blast radius, the
-    # 6 numerics-twin oracle-hardening keys, and the 9-key inline-fold
-    # try-conversion cohort landed late in the round) followed by pure
-    # stalest-evidence rotation
-    window = order[:50]
-    never_graded = [k for k in order if Q._grading_priority(k) == 0]
-    assert len(never_graded) + len(Q._CHANGED_R13_PIN) <= 50
-    assert set(never_graded) <= set(window)
-    assert Q._CHANGED_R13_PIN <= set(window)
-    assert len(Q._CHANGED_R13_PIN) == 39
-    # the rotation slots must refresh the STALEST evidence — with 39
-    # changed-key pins, 11 rotation slots remain: the whole 8-key
-    # r5-vintage residue plus the head of the r6 cohort (the rest of
-    # r6 carries to round 14 as the stalest tier)
-    assert not [k for k in order if 1 <= Q._freshest_round(k) <= 4]
-    rotation = [k for k in window if k not in Q._CHANGED_R13_PIN]
-    assert len(rotation) == 11
-    # every r5-vintage key refreshes this round — 4 of the 8 are compat
-    # consumers and refresh via the pin set; the other 4 rotate
-    r5_vintage = [k for k in order if Q._freshest_round(k) == 5]
-    assert len(r5_vintage) == 8, len(r5_vintage)
-    assert set(r5_vintage) <= set(window)
-    assert all(Q._freshest_round(k) in (5, 6) for k in rotation), rotation
-    # no rotated r6 key may be skipped ahead of a staler r6 key: the
-    # rotation must be the exact head of the stalest-first ordering
-    graded_tail = [k for k in order[50:] if Q._grading_priority(k) >= 1]
-    assert all(Q._freshest_round(k) >= 6 for k in graded_tail)
+    expected = [
+        k
+        for m in Q._MODULES
+        for k in importlib.import_module(f"modevetl_spark.queries.{m}").QUERIES
+    ]
+    assert list(Q.all_queries()) == expected
+
+
+def test_missing_query_module_is_loud(monkeypatch):
+    """A query module that fails to import must raise, not silently drop
+    its keys (and their parity tests) from the registry."""
+    from modevetl_spark import queries as Q
+
+    monkeypatch.setattr(Q, "_MODULES", [*Q._MODULES, "no_such_module"])
+    with pytest.raises(ModuleNotFoundError):
+        Q.all_queries()
