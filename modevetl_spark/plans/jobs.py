@@ -2,30 +2,42 @@
 
 ``MoDevETL`` ships two production jobs (``hierarchy.py``, ``reviews.py``):
 cron-style pull -> transform -> push pipelines over the Bugzilla ES
-cluster. These are their engine-equivalents over the driver tables:
+cluster. Every job here is one such cron tick over the driver tables,
+run through :func:`~modevetl_spark.streaming.incremental.watermark_tick`
+(which holds the pull / mark contract):
 
-- :func:`hierarchy_job` — the transitive dependency hierarchy: pull edges
-  newer than the watermark, recompute the closure, upsert (descendant
-  counts keyed by ancestor) into the sink. Incremental contract identical
-  to the reference: re-running with no new data is a no-op; updated docs
-  replace their previous derived rows.
+- :func:`hierarchy_job` — the transitive dependency hierarchy: recompute
+  the closure of the partkey tree, upsert descendant counts keyed by
+  ancestor. :func:`hierarchy_job_incremental` is its frontier-only twin
+  for insert-only edge streams.
 - :func:`reviews_job` — review-latency facts: for each 'purchase' event,
   latency since the user's latest prior 'click' (the as-of idiom), daily
   aggregates upserted by (day, user).
+- :func:`dedup_job` — standing near-dup detection: probe the persisted
+  LSH index with the new documents, append candidate pairs and band rows.
+- :func:`scd2_job` — SCD-2 dimension maintenance: merge new events into
+  the persisted interval store.
+- :func:`curate_job` — training-data curation: score, filter and
+  exact-dedup new documents against everything already curated.
+
+Each job returns the number of source rows its tick pulled, except
+:func:`curate_job`, which returns the survivors it wrote.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from modevetl_spark.operators.closure import ancestors_of, transitive_closure
+from modevetl_spark.operators.graph import partkey_tree_edges
 from modevetl_spark.sources.catalog import load
 from modevetl_spark.streaming.incremental import (
-    Watermark,
-    pull_newer,
     run_incremental,
     upsert_parquet,
+    watermark_tick,
 )
 
 
@@ -39,36 +51,36 @@ def hierarchy_transform(edges: DataFrame) -> DataFrame:
     )
 
 
+def _hierarchy_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src -> dst) partkey tree edges, standing in for the bug
+    ``dependson`` graph the reference pulls from ES, with the child key
+    doubling as the arrival order (the stand-in modified_ts)."""
+    tree = partkey_tree_edges(load(spark, sf_dir, "part"))
+    return tree.withColumn("modified_seq", F.col("src"))
+
+
 def hierarchy_job(
     spark: SparkSession,
     sf_dir: str,
     sink_path: str,
     state_path: str,
 ) -> int:
-    """The hierarchy ETL: partkey parent edges stand in for the bug
-    ``dependson`` graph (same shape the reference pulls from ES)."""
-    part = load(spark, sf_dir, "part")
-    edges = part.where(F.col("p_partkey") >= 2).select(
-        F.col("p_partkey").alias("node"),
-        F.expr("p_partkey div 2").alias("ancestor"),
-        F.col("p_partkey").alias("modified_seq"),  # stand-in modified_ts
-    )
+    """The hierarchy ETL as a full recompute.
 
-    def transform(pending: DataFrame) -> DataFrame:
-        # Closure is a global property: a changed edge can alter counts for
-        # ancestors far outside the pending subset, so pending only *gates*
-        # the run — the recompute uses the full edge set (the reference
-        # does the same: get_pending decides WHETHER to run, then the
-        # hierarchy is rebuilt from all current docs). An
-        # affected-subgraph-only recompute is the optimization to add when
-        # the edge table outgrows full-recompute budgets.
-        return hierarchy_transform(edges.select("node", "ancestor"))
-
+    Closure is a global property: a changed edge can alter counts for
+    ancestors far outside the pending subset, so pending only *gates*
+    the run — the recompute uses the full edge set (the reference does
+    the same: get_pending decides WHETHER to run, then the hierarchy is
+    rebuilt from all current docs). :func:`hierarchy_job_incremental` is
+    the affected-subgraph-only form."""
+    edges = _hierarchy_edges(spark, sf_dir)
     return run_incremental(
         spark,
         edges,
         ts_col="modified_seq",
-        transform=transform,
+        transform=lambda _pending: hierarchy_transform(
+            edges.select(F.col("src").alias("node"), F.col("dst").alias("ancestor"))
+        ),
         sink_path=sink_path,
         keys=["ancestor"],
         state_path=state_path,
@@ -80,7 +92,6 @@ def hierarchy_job_incremental(
     sf_dir: str,
     sink_path: str,
     state_path: str,
-    upper_bound: int | None = None,
 ) -> int:
     """True frontier-incremental hierarchy (insert-only edge stream):
     walk ONLY the pending nodes' ancestor chains (``ancestors_of``) and
@@ -91,82 +102,52 @@ def hierarchy_job_incremental(
     Matches :func:`hierarchy_job`'s full recompute exactly for insert-only
     workloads (asserted in tests); edge deletions/moves require the full
     recompute path.
+
+    Replay safety: the delta merge is NOT idempotent, so a stale or lost
+    state file must not re-add already-counted nodes. Like the reference
+    (which asks the ES sink for its max modified_ts), the sink's
+    ``max_node`` is a floor under the stored mark — a replayed batch then
+    pulls nothing.
     """
-    import os
-
-    from pyspark.sql import functions as SF
-
-    part = load(spark, sf_dir, "part")
-    edges = part.where(F.col("p_partkey") >= 2).select(
-        F.col("p_partkey").alias("node"),
-        F.expr("p_partkey div 2").alias("ancestor"),
-        F.col("p_partkey").alias("modified_seq"),
-    )
-    wm = Watermark(state_path, spark=spark)
-    mark = wm.read()
-    # Replay safety: the delta merge is NOT idempotent, so a stale/lost
-    # state file must not re-add already-counted nodes. Like the reference
-    # (which asks the ES sink for its max modified_ts), derive a second
-    # mark from the sink itself and take the max — a replayed batch then
-    # pulls nothing.
     from modevetl_spark.sources.fs import fs_exists
 
-    if fs_exists(spark, sink_path):
-        sink_mark = (
-            spark.read.parquet(sink_path).agg(SF.max("max_node")).collect()[0][0]
-        )
-        if sink_mark is not None:
-            mark = sink_mark if mark is None else max(mark, sink_mark)
-    pending = pull_newer(edges, "modified_seq", mark)
-    if upper_bound is not None:  # simulate a partial batch (tests/demos)
-        pending = pending.where(F.col("modified_seq") <= upper_bound)
-    n = pending.count()
-    if n == 0:
-        return 0
+    edges = _hierarchy_edges(spark, sf_dir)
+    prev = spark.read.parquet(sink_path) if fs_exists(spark, sink_path) else None
+    floor = None if prev is None else prev.agg(F.max("max_node")).collect()[0][0]
 
-    chains = ancestors_of(
-        pending.select("node"),
-        edges.select(F.col("node").alias("src"), F.col("ancestor").alias("dst")),
-        node="node",
-        src="src",
-        dst="dst",
-    )
-    deltas = chains.groupBy("ancestor").agg(
-        SF.count(SF.lit(1)).alias("d_descendants"),
-        SF.min("node").alias("d_min"),
-        SF.max("node").alias("d_max"),
-    )
-    if os.path.exists(sink_path):
-        prev = spark.read.parquet(sink_path)
-        merged = (
-            prev.join(deltas, on="ancestor", how="full")
-            .select(
+    def work(pending: DataFrame, _mark) -> None:
+        chains = ancestors_of(pending.select(F.col("src").alias("node")), edges)
+        deltas = chains.groupBy("ancestor").agg(
+            F.count(F.lit(1)).alias("d_descendants"),
+            F.min("node").alias("d_min"),
+            F.max("node").alias("d_max"),
+        )
+        if prev is None:
+            merged = deltas.select(
+                "ancestor",
+                F.col("d_descendants").alias("n_descendants"),
+                F.col("d_min").alias("min_node"),
+                F.col("d_max").alias("max_node"),
+            )
+        else:
+            merged = prev.join(deltas, on="ancestor", how="full").select(
                 "ancestor",
                 (
-                    SF.coalesce("n_descendants", SF.lit(0))
-                    + SF.coalesce("d_descendants", SF.lit(0))
+                    F.coalesce("n_descendants", F.lit(0))
+                    + F.coalesce("d_descendants", F.lit(0))
                 ).alias("n_descendants"),
-                SF.least(
-                    SF.coalesce("min_node", SF.lit((1 << 62))), SF.coalesce("d_min", SF.lit(1 << 62))
+                F.least(
+                    F.coalesce("min_node", F.lit(1 << 62)),
+                    F.coalesce("d_min", F.lit(1 << 62)),
                 ).alias("min_node"),
-                SF.greatest(
-                    SF.coalesce("max_node", SF.lit(-(1 << 62))),
-                    SF.coalesce("d_max", SF.lit(-(1 << 62))),
+                F.greatest(
+                    F.coalesce("max_node", F.lit(-(1 << 62))),
+                    F.coalesce("d_max", F.lit(-(1 << 62))),
                 ).alias("max_node"),
             )
-        )
-    else:
-        merged = deltas.select(
-            "ancestor",
-            F.col("d_descendants").alias("n_descendants"),
-            F.col("d_min").alias("min_node"),
-            F.col("d_max").alias("max_node"),
-        )
-    upsert_parquet(spark, merged, sink_path, keys=["ancestor"])
-    new_mark = pending.agg(F.max("modified_seq")).collect()[0][0]
-    if new_mark is not None:
-        wm.write(int(new_mark))
-    return n
+        upsert_parquet(spark, merged, sink_path, keys=["ancestor"])
+
+    return watermark_tick(spark, edges, "modified_seq", state_path, work, floor)
 
 
 def reviews_transform(events: DataFrame) -> DataFrame:
@@ -198,12 +179,28 @@ def reviews_transform(events: DataFrame) -> DataFrame:
 def reviews_job(
     spark: SparkSession, sf_dir: str, sink_path: str, state_path: str
 ) -> int:
+    """Review-latency facts upserted by (day, user). A user's as-of click
+    lookup and daily aggregates reach back past the delta, so each tick
+    recomputes every row of the users the delta touches from ALL their
+    events (the reference's "recompute the affected derived rows" step):
+    aggregating the delta alone would replace a (day, user) row that
+    spans two ticks with the later tick's partial one."""
     events = load(spark, sf_dir, "events")
+
+    def transform(pending: DataFrame) -> DataFrame:
+        touched = pending.select(F.col("user_id").alias("touched_user")).distinct()
+        # NULL-safe, like the upsert's key match: a NULL user is one group
+        return reviews_transform(
+            events.join(
+                touched, F.col("user_id").eqNullSafe(F.col("touched_user")), "left_semi"
+            )
+        )
+
     return run_incremental(
         spark,
         events,
         ts_col="ts",
-        transform=reviews_transform,
+        transform=transform,
         sink_path=sink_path,
         keys=["day", "user_id"],
         state_path=state_path,
@@ -213,10 +210,9 @@ def reviews_job(
 def dedup_job(
     spark: SparkSession, sf_dir: str, sink_path: str, state_path: str
 ) -> int:
-    """Standing near-dup job as a cron tick: pull documents newer than
-    the stored mark (doc_id is the fixture's arrival order), probe the
-    persisted LSH index under the sink with just that delta, append the
-    new candidate pairs and the batch's band rows, advance the mark.
+    """Standing near-dup job: probe the persisted LSH index under the
+    sink with the new documents (doc_id is the fixture's arrival order),
+    append the new candidate pairs and the batch's band rows.
 
     Each tick is O(|delta|) compute + one (band, band_key) equi-join
     against the index — the corpus is never re-read (see
@@ -224,43 +220,29 @@ def dedup_job(
     invariant). Index and pair stores live under ``sink_path`` and are
     addressed through the Hadoop-FS seam, so the job runs unmodified
     with an object-store sink."""
-    import os
-
     from modevetl_spark.operators.dedup import run_dedup_incremental
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    wm = Watermark(state_path, spark=spark)
-    # cache the delta: it feeds the count/mark stats, the signature
-    # build, and the index append — uncached, each would re-scan the
-    # source (3 corpus reads per tick at scale)
-    pending = pull_newer(docs, "doc_id", wm.read()).cache()
-    try:
-        stats = pending.agg(
-            F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("mark")
-        ).collect()[0]
-        if stats.n == 0:
-            return 0
+
+    def work(pending: DataFrame, _mark) -> None:
         run_dedup_incremental(
             spark,
             pending,
             os.path.join(sink_path, "lsh_index"),
             os.path.join(sink_path, "pairs"),
         )
-        if stats.mark is not None:
-            wm.write(stats.mark)
-        return stats.n
-    finally:
-        pending.unpersist()
+
+    return watermark_tick(spark, docs, "doc_id", state_path, work)
 
 
 def scd2_job(
     spark: SparkSession, sf_dir: str, sink_path: str, state_path: str
 ) -> int:
-    """Standing SCD-2 dimension maintenance as a cron tick: pull events
-    newer than the stored mark (event_id — the fixture's arrival order,
-    ts-monotone by construction), merge them O(delta) into the persisted
-    interval store under the sink (operators/scd2.merge_scd2_state —
-    only touched users' open tails rebuild), advance the mark.
+    """Standing SCD-2 dimension maintenance: merge the new events
+    (event_id — the fixture's arrival order, ts-monotone by construction)
+    O(delta) into the persisted interval store under the sink
+    (operators/scd2.merge_scd2_state — only touched users' open tails
+    rebuild).
 
     The watermark pull guarantees the merge's append-only contract
     (batch events never predate the open interval they extend), and a
@@ -268,29 +250,16 @@ def scd2_job(
     delta — merge is deterministic, so the keyed upsert rewrites the
     same rows (convergent, though the tick itself is not idempotent
     under arbitrary replays of OLDER data)."""
-    import os
-
     from modevetl_spark.operators.scd2 import merge_scd2_state
 
     events = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    wm = Watermark(state_path, spark=spark)
-    pending = pull_newer(events, "event_id", wm.read()).cache()
-    try:
-        stats = pending.agg(
-            F.count(F.lit(1)).alias("n"), F.max("event_id").alias("mark")
-        ).collect()[0]
-        if stats.n == 0:
-            return 0
-        merge_scd2_state(
-            spark, pending, os.path.join(sink_path, "scd2_dimension")
-        )
-        if stats.mark is not None:
-            wm.write(stats.mark)
-        return stats.n
-    finally:
-        pending.unpersist()
+
+    def work(pending: DataFrame, _mark) -> None:
+        merge_scd2_state(spark, pending, os.path.join(sink_path, "scd2_dimension"))
+
+    return watermark_tick(spark, events, "event_id", state_path, work)
 
 
 def curate_transform(docs: DataFrame) -> DataFrame:
@@ -319,12 +288,12 @@ def curate_job(
     min_tokens: int = 5,
 ) -> int:
     """Standing corpus-curation job — the end-to-end training-data tick
-    a reference user would run nightly: watermark-pull new documents,
-    score them (tokens / quality / language), drop the low-quality
-    tail, EXACT-dedup against everything ever curated (persisted
-    content-hash store: one delta-sized anti-join — the corpus is never
-    re-read), append survivors to the curated sink and their hashes to
-    the seen-store, advance the mark. Returns survivors appended.
+    a reference user would run nightly: score the new documents (tokens /
+    quality / language), drop the low-quality tail, EXACT-dedup against
+    everything ever curated (persisted content-hash store: one
+    delta-sized anti-join — the corpus is never re-read), append
+    survivors to the curated sink and their hashes to the seen-store.
+    Returns survivors written.
 
     Dedup-across-ticks invariant (pytest-gated): for an id-ordered
     arrival, ANY batch split of the corpus yields byte-identical
@@ -348,30 +317,16 @@ def curate_job(
     the LSH index). Two appends; everything through the Hadoop-FS seam
     / Spark writers."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    wm = Watermark(state_path, spark=spark)
-    pending = pull_newer(docs, "doc_id", wm.read()).cache()
-    try:
-        stats = pending.agg(
-            F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("mark")
-        ).collect()[0]
-        if stats.n == 0:
-            return 0
-        n_out = curate_batch(
-            spark,
-            pending,
-            sink_path,
-            min_quality,
-            min_tokens,
-            # deterministic for the delta (the watermark pins its lower
-            # bound, this is its max id) — a crash replay of the same
-            # delta overwrites the same curated partition
-            batch_id=stats.mark,
+
+    def work(pending: DataFrame, mark) -> int:
+        # the delta's max doc_id is deterministic for the delta (the
+        # stored mark pins its lower bound), so a crash replay of the
+        # same delta overwrites the same curated partition
+        return curate_batch(
+            spark, pending, sink_path, min_quality, min_tokens, batch_id=mark
         )
-        if stats.mark is not None:
-            wm.write(stats.mark)
-        return n_out
-    finally:
-        pending.unpersist()
+
+    return watermark_tick(spark, docs, "doc_id", state_path, work)
 
 
 def _migrate_flat_curated(spark: SparkSession, curated: str) -> None:
@@ -448,8 +403,6 @@ def curate_batch(
     as id'd batches (mixing flat files and partition directories in one
     sink would break parquet partition discovery), but WITHOUT the
     replay guarantee (appends duplicate on replay)."""
-    import os
-
     from modevetl_spark.sources.fs import fs_has_parquet_files
 
     scored = curate_transform(batch_docs)

@@ -10,6 +10,8 @@ the mark. This module reproduces that contract on parquet:
   on a cluster this lives in the job's state store).
 - :func:`pull_newer` — the watermark-filtered scan (predicate pushes into
   the parquet reader).
+- :func:`watermark_tick` — one cron tick (read mark, pull, work, advance
+  mark); every watermark job in ``plans/jobs.py`` runs through it.
 - :func:`upsert_parquet` — id-keyed idempotent merge: existing rows whose
   keys collide with incoming rows are replaced (anti-join + union +
   atomic directory swap). The Delta/Iceberg MERGE is the managed-table
@@ -79,6 +81,54 @@ def pull_newer(df: DataFrame, ts_col: str, watermark) -> DataFrame:
     if watermark is None:
         return df
     return df.where(F.col(ts_col) > F.lit(watermark))
+
+
+def watermark_tick(
+    spark: SparkSession,
+    source: DataFrame,
+    mark_col: str,
+    state_path: str,
+    work,
+    floor=None,
+):
+    """One cron tick of the incremental contract — the single place a
+    watermark job reads, pulls and advances its mark.
+
+    1. Read the stored mark (raised to ``floor`` when that is higher — a
+       mark the job derives from its own sink).
+    2. Pull the rows of ``source`` whose ``mark_col`` is strictly newer,
+       and cache them: the stats below and the job's work both read them.
+    3. Row count and new mark come from ONE aggregate job.
+    4. An empty pull returns 0 and leaves the state file untouched.
+    5. ``work(pending, new_mark)`` does the job's work on the cached rows.
+    6. The mark is written only after ``work`` returns, so a tick that
+       raises leaves it in place and the rerun pulls the same rows (every
+       job's work must therefore converge under a replay of its delta).
+       A datetime mark is stored as ``isoformat(sep=" ")`` text, which
+       ``pull_newer`` casts back to the column's type.
+    7. The cached rows are unpersisted on every exit.
+
+    Returns what ``work`` returns, or the number of rows pulled when it
+    returns None."""
+    wm = Watermark(state_path, spark=spark)
+    mark = wm.read()
+    if floor is not None and (mark is None or floor > mark):
+        mark = floor
+    pending = pull_newer(source, mark_col, mark).cache()
+    try:
+        stats = pending.agg(
+            F.count(F.lit(1)).alias("n"), F.max(mark_col).alias("mark")
+        ).collect()[0]
+        if stats.n == 0:
+            return 0
+        out = work(pending, stats.mark)
+        new_mark = stats.mark
+        if hasattr(new_mark, "isoformat"):
+            new_mark = new_mark.isoformat(sep=" ")
+        wm.write(new_mark)
+        return stats.n if out is None else out
+    finally:
+        pending.unpersist()
 
 
 def _null_safe_key_join(
@@ -485,24 +535,16 @@ def run_incremental(
     state_path: str,
     partition_by: list[str] | None = None,
 ) -> int:
-    """One cron-style incremental run: pull -> transform -> upsert ->
-    advance mark. Returns number of source rows processed. Pass
-    ``partition_by`` to keep the sink partitioned and each run's rewrite
-    scoped to the partitions the delta touches — the layout that keeps a
-    daily job O(day), not O(history)."""
-    wm = Watermark(state_path, spark=spark)
-    pending = pull_newer(source, ts_col, wm.read())
-    n = pending.count()
-    if n == 0:
-        return 0
-    result = transform(pending)
-    upsert_parquet(spark, result, sink_path, keys, partition_by)
-    new_mark = pending.agg(F.max(ts_col)).collect()[0][0]
-    if new_mark is not None:
-        if hasattr(new_mark, "isoformat"):
-            new_mark = new_mark.isoformat(sep=" ")
-        wm.write(new_mark)
-    return n
+    """The upsert flavour of :func:`watermark_tick`: transform the pending
+    rows and upsert the result by ``keys``. Returns the number of source
+    rows pulled. Pass ``partition_by`` to keep the sink partitioned and
+    each run's rewrite scoped to the partitions the delta touches — the
+    layout that keeps a daily job O(day), not O(history)."""
+
+    def work(pending: DataFrame, _mark) -> None:
+        upsert_parquet(spark, transform(pending), sink_path, keys, partition_by)
+
+    return watermark_tick(spark, source, ts_col, state_path, work)
 
 
 def delete_parquet(

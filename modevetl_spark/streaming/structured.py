@@ -160,24 +160,31 @@ def stateful_sessions(
     )
 
 
+def _drain(result: DataFrame, checkpoint_dir: str, sink, mode: str = "append") -> None:
+    """Drain the stream once (availableNow — the incremental-batch trigger)
+    into ``sink``: a foreachBatch function, or a parquet directory. The
+    checkpoint makes every face restartable at batch granularity."""
+    writer = (
+        result.writeStream.outputMode(mode)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("parquet").option("path", sink)
+    writer.start().awaitTermination()
+
+
 def run_to_sink(
     result: DataFrame,
     sink_dir: str,
     checkpoint_dir: str,
     mode: str = "append",
 ) -> None:
-    """Drain the stream once (availableNow — the incremental-batch trigger)
-    into a parquet sink. foreachBatch is the upsert hook at scale; plain
-    append suffices for the smoke contract."""
-    (
-        result.writeStream.outputMode(mode)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .format("parquet")
-        .option("path", sink_dir)
-        .start()
-        .awaitTermination()
-    )
+    """Drain the stream once into a parquet sink. foreachBatch is the
+    upsert hook at scale; plain append suffices for the smoke contract."""
+    _drain(result, checkpoint_dir, sink_dir, mode)
 
 
 def run_foreach_batch_upsert(
@@ -200,14 +207,7 @@ def run_foreach_batch_upsert(
             batch_df.sparkSession, batch_df, sink_path, keys, partition_by
         )
 
-    (
-        result.writeStream.outputMode(mode)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-        .awaitTermination()
-    )
+    _drain(result, checkpoint_dir, sink, mode)
 
 
 def documents_stream(spark: SparkSession, docs_dir: str) -> DataFrame:
@@ -253,14 +253,7 @@ def run_streaming_dedup(
             **dedup_kwargs,
         )
 
-    (
-        stream.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-        .awaitTermination()
-    )
+    _drain(stream, checkpoint_dir, sink)
 
 
 def attribution_join(
@@ -334,14 +327,7 @@ def run_streaming_scd2(
             batch_df.sparkSession, batch_df, state_path, **scd2_kwargs
         )
 
-    (
-        stream.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-        .awaitTermination()
-    )
+    _drain(stream, checkpoint_dir, sink)
 
 
 def run_streaming_curate(
@@ -371,11 +357,4 @@ def run_streaming_curate(
             **curate_kwargs,
         )
 
-    (
-        stream.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-        .awaitTermination()
-    )
+    _drain(stream, checkpoint_dir, sink)

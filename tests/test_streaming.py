@@ -12,6 +12,7 @@ import shutil
 import pyspark.sql.functions as F
 import pytest
 
+from modevetl_spark.jobs import JOBS
 from modevetl_spark.plans.jobs import hierarchy_job, reviews_job
 from modevetl_spark.streaming.incremental import Watermark, upsert_parquet
 from modevetl_spark.streaming.structured import (
@@ -21,6 +22,30 @@ from modevetl_spark.streaming.structured import (
     session_counts,
     tumbling_counts,
 )
+
+
+# ETL source table -> its arrival key (the column each job's watermark reads)
+_ARRIVAL_KEYS = {"part": "p_partkey", "events": "event_id", "documents": "doc_id"}
+
+
+@pytest.fixture(scope="module")
+def half_sf_dir(sf_dir, tmp_path_factory) -> str:
+    """Copy of the fixture with every ETL source table cut to the first
+    half of its rows by arrival key (raw parquet, no Spark round trip, so
+    the kept rows are byte-for-byte the fixture's); other tables as-is."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    dest = tmp_path_factory.mktemp("half")
+    for name in os.listdir(sf_dir):
+        key = _ARRIVAL_KEYS.get(name.removesuffix(".parquet"))
+        if key is None:
+            shutil.copy(os.path.join(sf_dir, name), dest)
+            continue
+        t = pq.read_table(os.path.join(sf_dir, name))
+        cut = sorted(t[key].to_pylist())[(t.num_rows - 1) // 2]
+        pq.write_table(t.filter(pc.less_equal(t[key], cut)), os.path.join(dest, name))
+    return str(dest)
 
 
 def test_watermark_roundtrip(tmp_path):
@@ -117,7 +142,7 @@ def test_hierarchy_job_incremental(spark, sf_dir, tmp_path):
 
 def test_jobs_cli_settings_file(sf_dir, tmp_path):
     """The operational front door: ``python -m modevetl_spark.jobs all
-    --settings settings.json`` runs both jobs from a JSON settings file and
+    --settings settings.json`` runs every job from a JSON settings file and
     is an incremental no-op on rerun."""
     import json
     import subprocess
@@ -214,7 +239,7 @@ def test_stream_dedup(spark, sf_dir, tmp_path):
     assert got.count() == got.distinct().count()
 
 
-def test_hierarchy_incremental_equals_full(spark, sf_dir, tmp_path):
+def test_hierarchy_incremental_equals_full(spark, sf_dir, half_sf_dir, tmp_path):
     """Frontier-incremental hierarchy across two split batches must equal
     the one-shot full recompute (insert-only edge stream)."""
     from modevetl_spark.plans.jobs import hierarchy_job, hierarchy_job_incremental
@@ -226,9 +251,10 @@ def test_hierarchy_incremental_equals_full(spark, sf_dir, tmp_path):
         for r in spark.read.parquet(full_sink).collect()
     }
 
+    # batch 1 sees only the first half of the part keys (a sliced copy)
     inc_sink = str(tmp_path / "inc")
     inc_state = str(tmp_path / "inc_state.json")
-    n1 = hierarchy_job_incremental(spark, sf_dir, inc_sink, inc_state, upper_bound=100)
+    n1 = hierarchy_job_incremental(spark, half_sf_dir, inc_sink, inc_state)
     n2 = hierarchy_job_incremental(spark, sf_dir, inc_sink, inc_state)
     assert n1 > 0 and n2 > 0
     inc = {
@@ -1152,3 +1178,118 @@ def test_streaming_scd2_equals_full_build(spark, sf_dir, tmp_path):
     want = scd2_build(ev)
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+def _sink_rows(spark, job_dir: str) -> dict[str, list[str]]:
+    """Rows of each parquet store of a job's sink (the sink itself, or
+    each subdirectory), order-insensitive. curate's ``_batch`` partition
+    is named after each tick's last doc_id, so it differs between a
+    ticked and a single-shot run by design and is dropped."""
+    names = os.listdir(job_dir)
+    if any(n.endswith(".parquet") for n in names):
+        stores = {".": job_dir}
+    else:
+        stores = {n: os.path.join(job_dir, n) for n in names}
+    return {
+        name: sorted(repr(r) for r in spark.read.parquet(path).drop("_batch").collect())
+        for name, path in stores.items()
+    }
+
+
+@pytest.mark.parametrize("job", list(JOBS))
+def test_split_ticks_equal_single_shot_tick(spark, sf_dir, half_sf_dir, tmp_path, job):
+    """Every settings-driven job, ticked over a source that grows from the
+    first half of its rows (by arrival key) to all of them and then stays
+    put, leaves the same sink rows and watermark file as one single-shot
+    tick, and the last (empty) tick returns 0."""
+    import json
+
+    from modevetl_spark.jobs import run_job
+
+    def settings(src: str, run: str) -> dict:
+        return {
+            "source": {"sf_dir": src},
+            "sink": {"dir": str(tmp_path / run / "sink")},
+            "state": {"dir": str(tmp_path / run / "state")},
+        }
+
+    assert run_job(spark, job, settings(sf_dir, "single")) > 0
+    ticks = [
+        run_job(spark, job, settings(d, "split"))
+        for d in (half_sf_dir, sf_dir, sf_dir)
+    ]
+    assert ticks[0] > 0 and ticks[2] == 0
+
+    sinks, marks = {}, {}
+    for run in ("single", "split"):
+        sinks[run] = _sink_rows(spark, str(tmp_path / run / "sink" / job))
+        marks[run] = json.loads((tmp_path / run / "state" / f"{job}.json").read_text())
+    assert sinks["split"] == sinks["single"]
+    assert marks["split"] == marks["single"]
+
+
+def test_watermark_tick_empty_pull_writes_no_state(spark, tmp_path):
+    """An empty pull returns 0 without running the work or writing state."""
+    from modevetl_spark.streaming.incremental import watermark_tick
+
+    state = tmp_path / "state.json"
+    called = []
+    src = spark.createDataFrame([], "id long")
+    n = watermark_tick(spark, src, "id", str(state), lambda p, m: called.append(m))
+    assert n == 0
+    assert not called and not state.exists()
+
+
+def test_watermark_tick_failed_work_keeps_mark(spark, tmp_path):
+    """A tick whose work raises leaves the stored mark where it was, so the
+    rerun pulls the same rows; the cached pull is released either way."""
+    from modevetl_spark.streaming.incremental import Watermark, watermark_tick
+
+    state = str(tmp_path / "state.json")
+    src = spark.createDataFrame([(i,) for i in range(1, 6)], "id long")
+    first = src.where("id <= 3")
+    assert watermark_tick(spark, first, "id", state, lambda p, m: None) == 3
+    assert Watermark(state).read() == 3
+
+    seen = []
+
+    def crash(pending, mark):
+        seen.append(pending)
+        raise RuntimeError("sink write failed")
+
+    with pytest.raises(RuntimeError, match="sink write failed"):
+        watermark_tick(spark, src, "id", state, crash)
+    assert Watermark(state).read() == 3
+    assert not seen[0].is_cached
+
+    pulled = []
+
+    def record(pending, mark):
+        pulled.extend(r.id for r in pending.collect())
+        seen.append(pending)
+
+    assert watermark_tick(spark, src, "id", state, record) == 2
+    assert sorted(pulled) == [4, 5]
+    assert Watermark(state).read() == 5
+    assert not seen[1].is_cached
+    # the work's own result, when it returns one, is the tick's result
+    src6 = src.unionByName(spark.createDataFrame([(6,)], "id long"))
+    assert watermark_tick(spark, src6, "id", state, lambda p, m: m * 10) == 60
+
+
+def test_watermark_tick_timestamp_mark_roundtrips(spark, tmp_path):
+    """A timestamp mark is stored as ``isoformat(sep=" ")`` text and
+    compares back against the column exactly, microseconds included."""
+    import datetime
+
+    from modevetl_spark.streaming.incremental import Watermark, watermark_tick
+
+    state = str(tmp_path / "state.json")
+    ts = [
+        datetime.datetime(2024, 1, 15, 10, 0, 0, 123456),
+        datetime.datetime(2024, 1, 15, 10, 0, 0, 123457),
+    ]
+    src = spark.createDataFrame([(t,) for t in ts], "ts timestamp")
+    assert watermark_tick(spark, src, "ts", state, lambda p, m: None) == 2
+    assert Watermark(state).read() == "2024-01-15 10:00:00.123457"
+    assert watermark_tick(spark, src, "ts", state, lambda p, m: None) == 0
