@@ -147,7 +147,10 @@ def hierarchy_job_incremental(
             )
         upsert_parquet(spark, merged, sink_path, keys=["ancestor"])
 
-    return watermark_tick(spark, edges, "modified_seq", state_path, work, floor)
+    # pulls only the edges above max(stored mark, sink floor); ``work``
+    # keeps the full edge list, which ``ancestors_of`` walks
+    source = edges if floor is None else edges.where(F.col("modified_seq") > floor)
+    return watermark_tick(spark, source, "modified_seq", state_path, work)
 
 
 def reviews_transform(events: DataFrame) -> DataFrame:
@@ -181,19 +184,30 @@ def reviews_job(
 ) -> int:
     """Review-latency facts upserted by (day, user). A user's as-of click
     lookup and daily aggregates reach back past the delta, so each tick
-    recomputes every row of the users the delta touches from ALL their
-    events (the reference's "recompute the affected derived rows" step):
-    aggregating the delta alone would replace a (day, user) row that
-    spans two ticks with the later tick's partial one."""
+    recomputes the touched users' rows from ALL their events (the
+    reference's "recompute the affected derived rows" step): aggregating
+    the delta alone would replace a (day, user) row that spans two ticks
+    with the later tick's partial one. Only the (day, user) keys of the
+    delta are upserted — every new event is newer than the mark, so it is
+    never an earlier click for an older purchase, and no other row can
+    change."""
     events = load(spark, sf_dir, "events")
 
     def transform(pending: DataFrame) -> DataFrame:
-        touched = pending.select(F.col("user_id").alias("touched_user")).distinct()
-        # NULL-safe, like the upsert's key match: a NULL user is one group
-        return reviews_transform(
-            events.join(
-                touched, F.col("user_id").eqNullSafe(F.col("touched_user")), "left_semi"
-            )
+        keys = pending.select(
+            F.date_trunc("day", "ts").alias("t_day"),
+            F.col("user_id").alias("t_user"),
+        ).distinct()
+        # NULL-safe, like the upsert's key match: a NULL key is one group
+        users = keys.select("t_user").distinct()
+        recomputed = reviews_transform(
+            events.join(users, F.col("user_id").eqNullSafe(F.col("t_user")), "left_semi")
+        )
+        return recomputed.join(
+            keys,
+            F.col("day").eqNullSafe(F.col("t_day"))
+            & F.col("user_id").eqNullSafe(F.col("t_user")),
+            "left_semi",
         )
 
     return run_incremental(

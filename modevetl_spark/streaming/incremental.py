@@ -89,13 +89,11 @@ def watermark_tick(
     mark_col: str,
     state_path: str,
     work,
-    floor=None,
 ):
     """One cron tick of the incremental contract — the single place a
     watermark job reads, pulls and advances its mark.
 
-    1. Read the stored mark (raised to ``floor`` when that is higher — a
-       mark the job derives from its own sink).
+    1. Read the stored mark.
     2. Pull the rows of ``source`` whose ``mark_col`` is strictly newer,
        and cache them: the stats below and the job's work both read them.
     3. Row count and new mark come from ONE aggregate job.
@@ -111,10 +109,7 @@ def watermark_tick(
     Returns what ``work`` returns, or the number of rows pulled when it
     returns None."""
     wm = Watermark(state_path, spark=spark)
-    mark = wm.read()
-    if floor is not None and (mark is None or floor > mark):
-        mark = floor
-    pending = pull_newer(source, mark_col, mark).cache()
+    pending = pull_newer(source, mark_col, wm.read()).cache()
     try:
         stats = pending.agg(
             F.count(F.lit(1)).alias("n"), F.max(mark_col).alias("mark")

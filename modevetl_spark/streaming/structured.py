@@ -160,20 +160,17 @@ def stateful_sessions(
     )
 
 
-def _drain(result: DataFrame, checkpoint_dir: str, sink, mode: str = "append") -> None:
+def _drain(writer, checkpoint_dir: str, mode: str = "append") -> None:
     """Drain the stream once (availableNow — the incremental-batch trigger)
-    into ``sink``: a foreachBatch function, or a parquet directory. The
+    through ``writer``, a ``writeStream`` with its sink already set. The
     checkpoint makes every face restartable at batch granularity."""
-    writer = (
-        result.writeStream.outputMode(mode)
+    (
+        writer.outputMode(mode)
         .trigger(availableNow=True)
         .option("checkpointLocation", checkpoint_dir)
+        .start()
+        .awaitTermination()
     )
-    if callable(sink):
-        writer = writer.foreachBatch(sink)
-    else:
-        writer = writer.format("parquet").option("path", sink)
-    writer.start().awaitTermination()
 
 
 def run_to_sink(
@@ -184,7 +181,11 @@ def run_to_sink(
 ) -> None:
     """Drain the stream once into a parquet sink. foreachBatch is the
     upsert hook at scale; plain append suffices for the smoke contract."""
-    _drain(result, checkpoint_dir, sink_dir, mode)
+    _drain(
+        result.writeStream.format("parquet").option("path", sink_dir),
+        checkpoint_dir,
+        mode,
+    )
 
 
 def run_foreach_batch_upsert(
@@ -207,7 +208,7 @@ def run_foreach_batch_upsert(
             batch_df.sparkSession, batch_df, sink_path, keys, partition_by
         )
 
-    _drain(result, checkpoint_dir, sink, mode)
+    _drain(result.writeStream.foreachBatch(sink), checkpoint_dir, mode)
 
 
 def documents_stream(spark: SparkSession, docs_dir: str) -> DataFrame:
@@ -253,7 +254,7 @@ def run_streaming_dedup(
             **dedup_kwargs,
         )
 
-    _drain(stream, checkpoint_dir, sink)
+    _drain(stream.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 def attribution_join(
@@ -327,7 +328,7 @@ def run_streaming_scd2(
             batch_df.sparkSession, batch_df, state_path, **scd2_kwargs
         )
 
-    _drain(stream, checkpoint_dir, sink)
+    _drain(stream.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 def run_streaming_curate(
@@ -357,4 +358,4 @@ def run_streaming_curate(
             **curate_kwargs,
         )
 
-    _drain(stream, checkpoint_dir, sink)
+    _drain(stream.writeStream.foreachBatch(sink), checkpoint_dir)

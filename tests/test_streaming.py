@@ -266,6 +266,29 @@ def test_hierarchy_incremental_equals_full(spark, sf_dir, half_sf_dir, tmp_path)
     assert hierarchy_job_incremental(spark, sf_dir, inc_sink, inc_state) == 0
 
 
+def test_hierarchy_incremental_lost_state_replays_nothing(
+    spark, sf_dir, half_sf_dir, tmp_path
+):
+    """Two frontier ticks (half, then all of the part keys) equal the full
+    recompute. The frontier merge adds counts, so it must never replay
+    counted nodes: with its state file lost, the job falls back on the
+    sink's ``max_node`` floor, pulls nothing and leaves the sink as it was."""
+    from modevetl_spark.plans.jobs import hierarchy_job, hierarchy_job_incremental
+
+    full = str(tmp_path / "full")
+    hierarchy_job(spark, sf_dir, full, str(tmp_path / "full_state.json"))
+    sink, state = str(tmp_path / "inc"), tmp_path / "inc_state.json"
+    assert hierarchy_job_incremental(spark, half_sf_dir, sink, str(state)) > 0
+    assert hierarchy_job_incremental(spark, sf_dir, sink, str(state)) > 0
+    before = sorted(spark.read.parquet(sink).collect())
+    assert before == sorted(spark.read.parquet(full).collect())
+
+    state.unlink()
+    assert hierarchy_job_incremental(spark, sf_dir, sink, str(state)) == 0
+    assert sorted(spark.read.parquet(sink).collect()) == before
+    assert not state.exists()
+
+
 def test_stateful_sessions_parity(spark, sf_dir, tmp_path):
     """applyInPandasWithState sessionizer vs an independent driver-side
     fold over the same events: every closed session must agree. Sessions
